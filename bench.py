@@ -18,6 +18,7 @@ import json
 import os
 import re
 import sys
+import threading
 import time
 
 import __spark_entry__ as entrymod
@@ -78,12 +79,9 @@ def main() -> None:
     # control-normalized evidence lands in the one-line JSON itself as
     # ADDITIVE keys ("controls", "adjudication") so a contended sweep is
     # visible in the run's own output. Everything is guarded: a compare
-    # failure can never suppress the JSON contract line.
-    extra: dict = {}
-    try:
-        extra = _self_defense(spark, sf_dir, timings, total)
-    except Exception as e:  # never let the watchdog kill the contract
-        print(f"bench: self-defense pass failed: {e}", file=sys.stderr)
+    # failure can never suppress the JSON contract line, and neither can
+    # a hang: the pass runs under a wall bound (_bounded_self_defense).
+    extra = _bounded_self_defense(spark, sf_dir, timings, total)
     print(json.dumps({
         "metric": "total_query_wall_sec",
         "value": total,
@@ -91,20 +89,53 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         **extra,
-    }))
+    }), flush=True)
     spark.stop()
 
 
-def _self_defense(spark, sf_dir: str, timings: dict,
-                  total: float) -> dict:
-    """Baseline compare + in-run adjudication; returns additive JSON keys."""
+# Wall bound of the post-sweep self-defense pass. Past it no re-run
+# starts, and a re-run still going is cancelled (cancelAllJobs) so the
+# contract line prints with whatever evidence was gathered.
+_SELF_DEFENSE_WALL_S = 300.0
+
+
+def _bounded_self_defense(spark, sf_dir: str, timings: dict, total: float,
+                          wall_s: float = _SELF_DEFENSE_WALL_S) -> dict:
+    """Run :func:`_self_defense` in a daemon thread for at most ``wall_s``
+    (plus a 30 s grace after cancelling); return the additive JSON keys it
+    produced, a partial set if it was cut off."""
+    extra: dict = {}
+
+    def run():
+        try:
+            _self_defense(spark, sf_dir, timings, total, extra,
+                          time.monotonic() + wall_s)
+        except Exception as e:  # never let the watchdog kill the contract
+            print(f"bench: self-defense pass failed: {e}", file=sys.stderr)
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(wall_s)
+    if worker.is_alive():
+        print(f"bench: self-defense pass exceeded {wall_s:.0f}s; "
+              "cancelling its jobs", file=sys.stderr)
+        spark.sparkContext.cancelAllJobs()
+        worker.join(30.0)
+        extra["self_defense_cut"] = True
+    return dict(extra)
+
+
+def _self_defense(spark, sf_dir: str, timings: dict, total: float,
+                  extra: dict, deadline: float) -> None:
+    """Baseline compare + in-run adjudication, written into ``extra`` as
+    additive JSON keys; no re-run starts after ``deadline`` (monotonic)."""
     base = _load_baseline()
     if base is None:
-        return {}
+        return
     flagged, controls = _compare(timings, total, base)
-    extra: dict = {"controls": controls}
+    extra["controls"] = controls
     if not flagged:
-        return extra
+        return
     # In-run flag ADJUDICATION (r17): transient host-contention
     # episodes on this box can inflate a CONSECUTIVE band of
     # queries straight through best-of-3 (see BASELINE.md round-17
@@ -119,6 +150,8 @@ def _self_defense(spark, sf_dir: str, timings: dict,
     for name in redo:
         best = None
         for _ in range(3):
+            if time.monotonic() > deadline:
+                break
             t0 = time.perf_counter()
             try:
                 qs[name](spark, sf_dir).collect()
@@ -129,7 +162,6 @@ def _self_defense(spark, sf_dir: str, timings: dict,
         if best is not None:
             re_t[name] = round(best, 3)
     extra["adjudication"] = _adjudicate(flagged, re_t, base)
-    return extra
 
 
 def _adjudicate(flagged: list, re_t: dict, base: dict) -> dict:

@@ -14,8 +14,12 @@ This module reproduces the reference's physics explicitly:
                         maintain one live sketch per group key, emit
                         ``(keys..., state: binary)`` — one row per group per
                         partition;
-  phase 2 (reduce-side) ``groupBy(keys).agg(combine_udf)``: shuffle only the
-                        small states and merge.
+  phase 2 (reduce-side) ``repartition(keys)`` + ``sortWithinPartitions``:
+                        shuffle only the small states, then ONE
+                        ``mapInPandas`` pass per partition merges each
+                        contiguous group with the ``states`` family
+                        (:func:`_merge_states`) — Python is entered once
+                        per Arrow batch, not once per group per measure.
 
 The output of ``sketch_accumulate`` is a re-aggregable summary table exactly
 like the reference's accumulate results (``README.md:68-100``): filter it,
@@ -34,12 +38,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegralType,
     StructField,
     StructType,
 )
 
 from .. import conf
-from ..functions.udfs import combine_udf
 from ..sketches import (
     ITEM_DOUBLE,
     ITEM_LONG,
@@ -743,13 +750,171 @@ def sketch_partial_multi(df: DataFrame, keys: list[str],
     return src.mapInPandas(build, out_schema)
 
 
+_NAN = object()  # one token for every NaN, which never equals itself
+
+
+def _group_token(v):
+    """A hashable rendering of a key value that compares equal wherever
+    Spark's grouping does: pandas renders a null as None, NaN or NaT,
+    none of which equals itself, and a struct/array key as a dict/array."""
+    if isinstance(v, dict):
+        return tuple(_group_token(x) for x in v.values())
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return tuple(_group_token(x) for x in v)
+    if isinstance(v, (float, np.floating)) and np.isnan(v):
+        return _NAN
+    if v is None or v is pd.NaT:
+        return None
+    return v
+
+
+def _run_bounds(pdf: pd.DataFrame, cols: list[str]) -> np.ndarray:
+    """``[0, cut..., len(pdf)]``: the rows where any of ``cols`` differs
+    from the row before. On input sorted on ``cols`` each run is one
+    group, and the runs come in row order."""
+    n = len(pdf)
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for c in cols:
+        s = pdf[c]
+        if s.dtype == object:
+            t = [_group_token(v) for v in s.tolist()]
+            change |= np.fromiter((a != b for a, b in zip(t[1:], t)),
+                                  bool, n - 1)
+        else:
+            v, na = s.to_numpy(), s.isna().to_numpy()
+            change |= ~((v[1:] == v[:-1]) | (na[1:] & na[:-1]))
+    return np.concatenate(([0], np.flatnonzero(change) + 1, [n]))
+
+
+def _proven_empty(df: DataFrame) -> bool:
+    """True when Spark's optimizer reduces ``df`` to an empty local
+    relation (``limit(0)``, a false filter, an empty local table)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return (plan.getClass().getSimpleName() == "LocalRelation"
+            and plan.data().isEmpty())
+
+
+def _merge_states(partial: DataFrame, keys: list[str],
+                  states: dict[str, str]) -> DataFrame:
+    """Phase 2: merge each group's partial states in ONE ``mapInPandas``
+    pass per shuffle partition (``states`` maps input state column to
+    output column; family-agnostic via the ``states`` family).
+
+    The exchange hash-partitions on the keys and sorts within partitions,
+    so a group's rows are contiguous: the loop emits a group as soon as its
+    key closes, and only the group still open at an Arrow batch boundary
+    carries over. Live memory is one group, as with a sort-based aggregate,
+    and Python is entered once per batch, not once per group per state.
+    There is no ``max_groups`` flush here: a flushed group would come out
+    twice. Without keys every state goes to one partition and exactly one
+    row comes out, holding null states on empty input (SQL's rule for a
+    global aggregate). A corrupt state raises, as combine does.
+
+    Key columns that pandas would blur get a flag column that rides
+    along as an extra group column and is undone afterwards: float keys
+    an ``isnan`` flag (pandas renders null and NaN alike; -0.0 and NaN
+    payloads are folded first, as Spark's own grouping does), nullable
+    integral keys an ``isnull`` flag over ``coalesce(k, 0)`` (a null in
+    the batch would turn the column into float64, which is not exact
+    past 2**53). All of it goes into one ``select``: every DataFrame
+    step costs driver-side analysis on each call."""
+    fam = _states_family()
+    in_cols, out_cols = list(states), list(states.values())
+    fields = [partial.schema[k] for k in keys]
+    sel, nan_flags, null_flags = list(keys), {}, {}  # key -> flag column
+    for i, k in enumerate(keys):
+        dt, c = fields[i].dataType, F.col(k)
+        if isinstance(dt, (FloatType, DoubleType)):
+            nan_flags[k] = f"__isnan{i}"
+            sel[i] = (F.when(c == 0, F.lit(0.0).cast(dt))
+                      .when(F.isnan(c), F.lit(float("nan")).cast(dt))
+                      .otherwise(c).alias(k))
+        elif isinstance(dt, IntegralType) and fields[i].nullable:
+            null_flags[k] = f"__isnull{i}"
+            sel[i] = F.coalesce(c, F.lit(0).cast(dt)).alias(k)
+        else:
+            continue
+        fields[i] = StructField(k, dt, True)
+    src = partial.select(
+        *sel, *[F.isnan(k).alias(f) for k, f in nan_flags.items()],
+        *[F.col(k).isNull().alias(f) for k, f in null_flags.items()],
+        *in_cols)
+    # the isnull flags stay in Python: the pass restores those nulls
+    out_keys = keys + list(nan_flags.values())
+    group_cols = out_keys + list(null_flags.values())
+    null_at = {keys.index(k): group_cols.index(f)
+               for k, f in null_flags.items()}
+    out_schema = StructType(
+        fields + [StructField(f, BooleanType()) for f in nan_flags.values()]
+        + [StructField(c, BinaryType()) for c in out_cols])
+
+    def rows(done: list) -> pd.DataFrame:
+        out = {}
+        for i, c in enumerate(out_keys):
+            vals = [kv[i] for kv, _ in done]
+            if i in null_at:  # object ints cross to Arrow exactly
+                j = null_at[i]
+                vals = pd.Series([None if kv[j] else int(v)
+                                  for (kv, _), v in zip(done, vals)],
+                                 dtype=object)
+            out[c] = vals
+        for j, c in enumerate(out_cols):
+            out[c] = [sks[j].serialize() for _, sks in done]
+        return pd.DataFrame(out)
+
+    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        open_tok = open_kv = open_sks = None
+        if not keys:
+            open_tok, open_kv, open_sks = (), (), [fam.make() for _ in in_cols]
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ctxs = [fam.prep(pdf[c]) for c in in_cols]
+            bounds = _run_bounds(pdf, group_cols)
+            kvs = (pdf[group_cols].iloc[bounds[:-1]]
+                   .itertuples(index=False, name=None) if keys else [()])
+            done = []
+            for kv, lo, hi in zip(kvs, bounds[:-1], bounds[1:]):
+                tok = _group_token(kv)
+                if open_sks is None or tok != open_tok:
+                    if open_sks is not None:
+                        done.append((open_kv, open_sks))
+                    open_tok, open_kv = tok, kv
+                    open_sks = [fam.make() for _ in in_cols]
+                for sk, ctx in zip(open_sks, ctxs):
+                    fam.update(sk, ctx, slice(lo, hi))
+            if done:
+                yield rows(done)
+        if open_sks is not None:
+            yield rows([(open_kv, open_sks)])
+
+    if keys:
+        src = src.repartition(*keys).sortWithinPartitions(*group_cols)
+    elif _proven_empty(src):
+        # the optimizer drops the repartition of an input it proves empty,
+        # leaving the pass no partition to emit the one row from
+        return partial.sparkSession.range(0, 1, 1, 1).select(
+            *[F.lit(None).cast(BinaryType()).alias(c) for c in out_cols])
+    else:
+        src = src.repartition(1)
+    merged = src.mapInPandas(merge, out_schema)
+    if not nan_flags:
+        return merged
+    return merged.select(
+        *[F.when(F.col(nan_flags[k]), F.lit(float("nan")).cast(f.dataType))
+          .otherwise(F.col(k)).alias(k) if k in nan_flags else k
+          for k, f in zip(keys, fields)],
+        *out_cols)
+
+
 def sketch_grouped_agg(df: DataFrame, keys: list[str],
                        *measures: Measure,
                        max_groups: int = 100_000) -> DataFrame:
     """Grouped sketch aggregation with the scale-correct physics: map-side
-    partial sketches (``mapInPandas``), a state-only shuffle, reduce-side
-    merge, then estimate. This is what a bare ``GROUPED_AGG`` pandas UDF
-    cannot do — it would shuffle every raw row to the aggregating task
+    partial sketches (``mapInPandas``), a state-only shuffle, a sorted
+    merge pass (:func:`_merge_states`), then estimate. This is what a
+    bare ``GROUPED_AGG`` pandas UDF cannot do — it would shuffle every
+    raw row to the aggregating task
     (the reference gets partial/final for free from
     ``TypedImperativeAggregate``, ``quantileSketches.scala:234-273``).
 
@@ -758,10 +923,9 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
     changes results, only the count of (still state-sized) shuffle rows."""
     ms = list(measures)
     partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    combines = [combine_udf()(F.col(f"{m.name}__state"))
-                .alias(f"{m.name}__state") for m in ms]
-    merged = (partial.groupBy(*keys).agg(*combines) if keys
-              else partial.agg(*combines))
+    merged = _merge_states(partial, keys,
+                           {f"{m.name}__state": f"{m.name}__state"
+                            for m in ms})
     outs = []
     for m in ms:
         out = m.estimator(F.col(f"{m.name}__state"))
@@ -770,16 +934,18 @@ def sketch_grouped_agg(df: DataFrame, keys: list[str],
             dt = df.schema[m.col].dataType
             out = preserve_output_type(out, dt.simpleString(), m.multi)
         outs.append(out.alias(m.name))
-    return merged.select(*keys, *outs)
+    out = merged.select(*keys, *outs)
+    # One row by construction. Spark pushes a filter on the estimates (the
+    # size(...) > 0 it infers for inline/explode, a HAVING) through this
+    # projection but not through a limit; below it, every estimate UDF
+    # would run twice.
+    return out if keys else out.limit(1)
 
 
 def sketch_merge(df: DataFrame, keys: list[str],
                  state_col: str = "state") -> DataFrame:
     """Phase 2: merge partial states per group (family-agnostic)."""
-    merged = combine_udf()(F.col(state_col)).alias(state_col)
-    if keys:
-        return df.groupBy(*keys).agg(merged)
-    return df.agg(merged)
+    return _merge_states(df, keys, {state_col: state_col})
 
 
 def sketch_accumulate(df: DataFrame, keys: list[str], col: str,
@@ -806,7 +972,8 @@ def sketch_accumulate_multi(df: DataFrame, keys: list[str],
                             max_groups: int = 100_000) -> DataFrame:
     """Two-phase accumulate for SEVERAL measures in ONE pass (r16):
     the source scans once, one live sketch per (group, measure) on the
-    map side, ONE state-only shuffle row per group, and the output is
+    map side, ONE state-only shuffle row per group, merged per group in
+    one sorted pass (:func:`_merge_states`), and the output is
     ``(keys..., <measure name> binary state ...)`` — what a summary
     table writing N sketch families per key should run instead of N
     :func:`sketch_accumulate` scans. Build measures with
@@ -814,7 +981,5 @@ def sketch_accumulate_multi(df: DataFrame, keys: list[str],
     accepts, incl. tuple's two-column input as a col tuple)."""
     ms = list(measures)
     partial = sketch_partial_multi(df, keys, ms, max_groups=max_groups)
-    combines = [combine_udf()(F.col(f"{m.name}__state")).alias(m.name)
-                for m in ms]
-    return (partial.groupBy(*keys).agg(*combines) if keys
-            else partial.agg(*combines))
+    return _merge_states(partial, keys,
+                         {f"{m.name}__state": m.name for m in ms})

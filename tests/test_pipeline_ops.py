@@ -575,6 +575,31 @@ class TestManyGroupsSkewStress:
         elapsed = time.monotonic() - t0
         assert elapsed < 300, f"grouped-agg stress took {elapsed:.1f}s"
 
+    def test_merge_straddles_arrow_batches(self, spark, skewed):
+        # Arrow batches far smaller than a partition: in the sorted phase-2
+        # pass, groups (the hot key's ~hundreds of partial states above
+        # all) straddle batch boundaries, and the group open at a boundary
+        # must carry over — one output row per key, answers unchanged.
+        from datasketches_spark_spark import functions as dsf
+        from datasketches_spark_spark.operators import sketch_accumulate
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "997")
+        try:
+            got = sketch_accumulate(
+                skewed, ["g"], "v", family="theta", k=4096,
+                max_groups=self.MAX_GROUPS,
+            ).select("g", dsf.approx_count_distinct_estimate("state")
+                     .alias("ndv")).cache()
+            assert got.count() == self.N_GROUPS + 1
+            assert got.select("g").distinct().count() == self.N_GROUPS + 1
+            exact = skewed.groupBy("g").agg(F.countDistinct("v").alias("ndv"))
+            assert got.exceptAll(exact).count() == 0
+            assert exact.exceptAll(got).count() == 0
+            got.unpersist()
+        finally:
+            spark.conf.set(key, old)
+
 
 class TestImageCodec:
     """Pure-numpy PPM/BMP codec: round-trips, header edge cases, the
